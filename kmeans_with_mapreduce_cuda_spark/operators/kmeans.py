@@ -8,16 +8,23 @@ Reference pipeline per iteration (kmeans_mapreduce_core.cu:237-259):
   reduce: per-cluster sum/mean               (:108-139) -> update_2d / update_nd
   driver loop x ITERATIONS                   (:237)     -> lloyd_2d / lloyd_nd
 
-Physical shape (why this scales to 100 TB):
-- Centroids are k literal values baked into a projection -- the "broadcast"
-  is the query plan itself.  Assignment is a pure narrow map: zero joins,
-  zero shuffles, whole-stage codegen end to end.
-- The only shuffle per iteration is the groupBy(cluster_id) update, which
-  does map-side partial aggregation (Spark's analog of the reference's
-  shared-memory block reduction, :108-139) so the shuffle carries
-  k * num_partitions rows, not N.
-- Per iteration exactly k rows cross to the driver -- same boundary as the
-  reference's per-iteration cluster_info D2H copy (:250-251).
+Physical shape of lloyd_2d, chosen per fit from the optimizer's size
+estimate for the points against spark.sql.autoBroadcastJoinThreshold
+(the bound Spark already trusts to pull a relation to the driver):
+- Within the threshold: the coordinates are collected to the driver ONCE
+  (one Arrow collect, one Spark job per fit) and every iteration runs in
+  NumPy in fixed-size row blocks -- the reference's copy-once-then-iterate
+  shape (:232-235), with zero Spark jobs per iteration.
+- Above it (or with the threshold at -1): one SQL statement per
+  iteration.  Centroids are k literal values baked into a projection --
+  the "broadcast" is the query plan itself -- so assignment is a pure
+  narrow map: zero joins, zero shuffles.  The only shuffle is the
+  groupBy(cluster_id) update, whose map-side partial aggregation (Spark's
+  analog of the reference's shared-memory block reduction, :108-139)
+  keeps it at k * num_partitions rows, not N; exactly k rows cross to the
+  driver per iteration, the reference's cluster_info D2H copy (:250-251).
+lloyd_nd, kmeans_step_2d and the seeding passes always take the Spark
+path.
 
 Semantics choices (SURVEY.md §2.1 fine print): float means (the documented
 algorithm, README.md:43-61, not the racy block-partial reduce), ties to the
@@ -30,7 +37,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -91,17 +98,25 @@ def iteration_confs(spark, shuffle_partitions: int = 8):
         spark.conf.set("spark.sql.codegen.wholeStage", old_ws)
 
 
+def _double_sql(v: float) -> str:
+    """An exact double literal: CAST(repr AS DOUBLE) round-trips the
+    double (plain SQL decimals would parse as DECIMAL type); nan/inf,
+    which are not SQL tokens, go through the string cast."""
+    v = float(v)
+    return f"CAST({v!r} AS DOUBLE)" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
 def _dists_sql_2d(centroids: Centroids2D, x: str, y: str) -> str:
     """Literal distance-array expression as ONE SQL string: a k=15 loop
     of Python Column algebra costs ~100 py4j round trips per iteration;
-    one expr() parse is ~free.  CAST(repr AS DOUBLE) round-trips the
-    exact double (plain SQL decimals would parse as DECIMAL type)."""
-    terms = ",".join(
-        f"((`{x}` - CAST({float(cx)!r} AS DOUBLE)) * (`{x}` - CAST({float(cx)!r} AS DOUBLE))"
-        f" + (`{y}` - CAST({float(cy)!r} AS DOUBLE)) * (`{y}` - CAST({float(cy)!r} AS DOUBLE)))"
-        for cx, cy in centroids
-    )
-    return f"array({terms})"
+    one expr() parse is ~free."""
+    terms = []
+    for cx, cy in centroids:
+        lx, ly = _double_sql(cx), _double_sql(cy)
+        terms.append(
+            f"((`{x}` - {lx}) * (`{x}` - {lx}) + (`{y}` - {ly}) * (`{y}` - {ly}))"
+        )
+    return f"array({','.join(terms)})"
 
 
 def assign_2d(
@@ -143,7 +158,7 @@ def _dists_sql_nd(centroids: CentroidsND, feats: str) -> str:
     """
     entries = []
     for c in centroids:
-        lits = ",".join(f"CAST({float(v)!r} AS DOUBLE)" for v in c)
+        lits = ",".join(_double_sql(v) for v in c)
         entries.append(
             f"aggregate(zip_with(`{feats}`, array({lits}),"
             " (p, q) -> (p-q)*(p-q)),"
@@ -257,6 +272,110 @@ def _step_sql_2d(view: str, centroids: Centroids2D, x: str, y: str) -> str:
     """
 
 
+#: rows per block of the driver-side Lloyd step: bounds its (block, k)
+#: double temporaries to block * k * 8 bytes each (~1 MB at k=15, so they
+#: stay in cache: 1M points, k=15 took 145 ms/step at 2^13 rows vs 239 ms
+#: at 2^16 on a 4-core x86 host)
+_DRIVER_BLOCK = 1 << 13
+
+
+def _fits_on_driver(points: DataFrame) -> bool:
+    """True when the optimizer's size estimate for ``points`` is within
+    ``spark.sql.autoBroadcastJoinThreshold`` -- the bound Spark already
+    trusts to pull a relation to the driver (``-1``: never).  Reads plan
+    statistics only; launches no job."""
+    jconf = points.sparkSession._jsparkSession.sessionState().conf()
+    limit = int(jconf.autoBroadcastJoinThreshold())
+    if limit < 0:
+        return False
+    size = points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) <= limit
+
+
+def _argmin_nan_last(d):
+    """Row argmin under Spark's double ordering (NaN above +inf, NaN ==
+    NaN): what ``array_position(d, array_min(d)) - 1`` picks when a
+    distance is NaN.  Ties still go to the lowest index."""
+    import numpy as np
+
+    nan = np.isnan(d)
+    lab = np.where(nan, np.inf, d).argmin(axis=1)
+    # a NaN won only because every non-NaN entry is +inf: take the first
+    # non-NaN one (an all-NaN row stays at 0, like Spark's)
+    fix = nan[np.arange(len(d)), lab] & ~nan.all(axis=1)
+    lab[fix] = (~nan[fix]).argmax(axis=1)
+    return lab
+
+
+def _driver_step_2d(points: DataFrame, x: str, y: str):
+    """Collect ``points``' coordinates once (one Spark job) and return
+    the Lloyd step over them in NumPy: the same double distance
+    ``(x-cx)*(x-cx)+(y-cy)*(y-cy)``, first-occurrence argmin and
+    sum / count means as _step_sql_2d.  Rows with a NULL coordinate are
+    dropped.  Returns {cluster_id: (cx, cy)} for non-empty clusters."""
+    import numpy as np
+
+    tbl = (
+        points.select(F.col(x).cast("double"), F.col(y).cast("double"))
+        .toArrow()
+        .drop_null()
+    )
+    xs = tbl.column(0).to_numpy()
+    ys = tbl.column(1).to_numpy()
+    finite = bool(np.isfinite(xs).all() and np.isfinite(ys).all())
+
+    def step(cents):
+        c = np.array(cents, dtype=np.float64).reshape(-1, 2)
+        k = len(c)
+        # finite points and centroids give no NaN distance
+        plain = finite and bool(np.isfinite(c).all())
+        sx, sy, n = np.zeros(k), np.zeros(k), np.zeros(k, dtype=np.int64)
+        for lo in range(0, len(xs), _DRIVER_BLOCK):
+            bx, by = xs[lo:lo + _DRIVER_BLOCK], ys[lo:lo + _DRIVER_BLOCK]
+            d = bx[:, None] - c[:, 0]
+            d *= d
+            dy = by[:, None] - c[:, 1]
+            dy *= dy
+            d += dy
+            lab = d.argmin(axis=1) if plain else _argmin_nan_last(d)
+            sx += np.bincount(lab, weights=bx, minlength=k)
+            sy += np.bincount(lab, weights=by, minlength=k)
+            n += np.bincount(lab, minlength=k)
+        return {
+            int(i): (float(sx[i] / n[i]), float(sy[i] / n[i]))
+            for i in np.flatnonzero(n)
+        }
+
+    return step
+
+
+def _spark_step_2d(points: DataFrame, x: str, y: str):
+    """The distributed Lloyd step: one _step_sql_2d statement, i.e. one
+    Spark job, per call.  Returns {cluster_id: (cx, cy)} for non-empty
+    clusters; the NULL group (points with a NULL coordinate) is skipped
+    here rather than filtered in the plan."""
+    spark = points.sparkSession
+    # The view is deliberately NOT dropped afterwards: dropTempView on a
+    # view over a cached DataFrame invalidates the cache's materialized
+    # buffers even though the registration survives -- every subsequent
+    # pass over ``points`` (this loop's next call, the caller's own
+    # queries) re-scans the source, measured 0.17 -> 0.7 s/iteration at
+    # sf0.1, permanently.  The per-object name makes re-registration
+    # idempotent; the leaked catalog entry is metadata only.
+    view = f"_lloyd2d_pts_{id(points)}"
+    points.createOrReplaceTempView(view)
+
+    def step(cents):
+        rows = spark.sql(_step_sql_2d(view, cents, x, y)).collect()
+        return {
+            int(r["cluster_id"]): (float(r["cx"]), float(r["cy"]))
+            for r in rows
+            if r["cluster_id"] is not None
+        }
+
+    return step
+
+
 def lloyd_2d(
     points: DataFrame,
     init: Centroids2D,
@@ -269,31 +388,32 @@ def lloyd_2d(
     README documents one but the loop is a fixed 999 rounds,
     config.cuh:11 vs README.md:20-22 -- we expose both maxIter and tol).
 
-    ``points`` is cached by the caller (device-resident analog,
-    kmeans_mapreduce_core.cu:232-235); each iteration re-bakes the k new
-    centroid literals into the plan, so lineage stays one stage deep and
-    needs no checkpointing.  The loop body is the single-statement SQL
-    twin of kmeans_step_2d (see _step_sql_2d) to keep the driver-side
-    per-iteration overhead at one parse.
+    Two physical paths, chosen by :func:`_fits_on_driver` (the plan's
+    size estimate against ``spark.sql.autoBroadcastJoinThreshold``):
+
+    - within the threshold, the coordinates are collected ONCE (one
+      Arrow collect, one Spark job per fit) and every iteration runs in
+      NumPy on the driver, in fixed-size row blocks -- the reference's
+      copy-once-then-iterate shape (kmeans_mapreduce_core.cu:232-235),
+      with no per-iteration parse, plan or job;
+    - above it (or with the threshold at -1), each iteration is one SQL
+      statement, i.e. one Spark job, over ``points`` (cached by the
+      caller); the k new centroid literals are re-baked into the plan
+      each time, so lineage stays one stage deep.
+
+    Both compute the same double distances, ties to the lowest
+    cluster_id, sum / count means and keep-previous empty clusters, so
+    on integer coordinates (exact sums) they return equal centroids.
+    Points with a NULL coordinate are skipped.
     """
-    spark = points.sparkSession
     cents = [tuple(map(float, c)) for c in init]
-    # The view is deliberately NOT dropped afterwards: dropTempView on a
-    # view over a cached DataFrame invalidates the cache's materialized
-    # buffers even though the registration survives -- every subsequent
-    # pass over ``points`` (this loop's next call, the caller's own
-    # queries) re-scans the source, measured 0.17 -> 0.7 s/iteration at
-    # sf0.1, permanently.  The per-object name makes re-registration
-    # idempotent; the leaked catalog entry is metadata only.
-    view = f"_lloyd2d_pts_{id(points)}"
-    points.createOrReplaceTempView(view)
-    with iteration_confs(spark):
+    if _fits_on_driver(points):
+        step, confs = _driver_step_2d(points, x, y), nullcontext()
+    else:
+        step, confs = _spark_step_2d(points, x, y), iteration_confs(points.sparkSession)
+    with confs:
         for _ in range(max_iter):
-            rows = spark.sql(_step_sql_2d(view, cents, x, y)).collect()
-            got = {
-                int(r["cluster_id"]): (float(r["cx"]), float(r["cy"]))
-                for r in rows
-            }
+            got = step(cents)
             new = [got.get(i, cents[i]) for i in range(len(cents))]
             shift = max(
                 math.hypot(nx - ox, ny - oy)

@@ -3,12 +3,19 @@
 -- the exact workload of `./kmeans_with_mapreduce-cuda data/birch1.txt`,
 checked against a NumPy Lloyd's with the documented semantics.
 
+Where the reference checkout is absent, the same checks run on a
+birch-shaped file generated with the benchmark's seeded generator
+(perfbench.gen: integer points in [0, 10^6] from 15 Gaussians on a
+jittered 5 x 3 grid, written in birch1.txt's right-aligned layout).
+
 (The reference's golden file data/birch1.txt.output is NOT comparable:
 its run is wall-clock-seeded and its reduce kernel races -- SURVEY.md
 §2.1.  Determinism here comes from seeded md5-order Forgy init.)
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -19,15 +26,29 @@ from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
     sse_2d,
 )
 from kmeans_with_mapreduce_cuda_spark.sources import read_points_text
+from perfbench.gen import birch_points, write_points_text
 
 BIRCH = "/root/reference/data/birch1.txt"
 N_INPUT = 10_000  # config.cuh:12
 K = 15  # config.cuh:14
+#: line count of birch1.txt, and the generated stand-in's seed
+N_FILE = 100_000
+GEN_SEED = 1
 
 
 @pytest.fixture(scope="module")
-def birch(spark):
-    df = read_points_text(spark, BIRCH, limit=N_INPUT).cache()
+def birch_path(tmp_path_factory):
+    """birch1.txt itself when present, else a generated birch-shaped file."""
+    if os.path.exists(BIRCH):
+        return BIRCH
+    path = str(tmp_path_factory.mktemp("birch") / "birch1.txt")
+    write_points_text(path, birch_points(GEN_SEED, N_FILE))
+    return path
+
+
+@pytest.fixture(scope="module")
+def birch(spark, birch_path):
+    df = read_points_text(spark, birch_path, limit=N_INPUT).cache()
     assert df.count() == N_INPUT
     return df
 
@@ -64,7 +85,7 @@ def test_birch_sse_improves_substantially(spark, birch):
     assert after < before * 0.5
 
 
-def test_cli_driver_runs_birch_sample(spark, tmp_path, capsys):
+def test_cli_driver_runs_birch_sample(spark, tmp_path, birch_path, capsys):
     """The __main__ CLI mirrors the reference binary's contract: reads the
     file, prints k 'Point: (x,y)' lines + three timing spans, --save
     appends the same lines to <input>.output."""
@@ -73,7 +94,7 @@ def test_cli_driver_runs_birch_sample(spark, tmp_path, capsys):
     from kmeans_with_mapreduce_cuda_spark.__main__ import main
 
     src = tmp_path / "birch_sample.txt"
-    shutil.copyfile(BIRCH, src)
+    shutil.copyfile(birch_path, src)
     lines = main(
         [str(src), "--k", "4", "--limit", "500", "--iters", "3", "--save"],
         spark=spark,
@@ -86,7 +107,7 @@ def test_cli_driver_runs_birch_sample(spark, tmp_path, capsys):
     assert saved == lines
 
 
-def test_cli_parity_ints_floors_coords(spark, tmp_path):
+def test_cli_parity_ints_floors_coords(spark, tmp_path, birch_path):
     """--parity-ints floors printed centroids (the reference's uint64
     floor-division means, kmeans_with_mapreduce-cuda.cu:105-121 /
     o13_sink_format semantics); without it coords truncate toward zero.
@@ -98,7 +119,7 @@ def test_cli_parity_ints_floors_coords(spark, tmp_path):
     from kmeans_with_mapreduce_cuda_spark.__main__ import main
 
     src = tmp_path / "birch_sample2.txt"
-    shutil.copyfile(BIRCH, src)
+    shutil.copyfile(birch_path, src)
     args = [str(src), "--k", "3", "--limit", "300", "--iters", "2"]
     plain = main(args, spark=spark)
     floored = main(args + ["--parity-ints"], spark=spark)
@@ -108,7 +129,7 @@ def test_cli_parity_ints_floors_coords(spark, tmp_path):
     assert floored == plain
 
 
-def test_cli_follow_streams_incrementally(spark, tmp_path, capsys):
+def test_cli_follow_streams_incrementally(spark, tmp_path, birch_path, capsys):
     """--follow: fit on the batch prefix, then drain the SAME file
     through the streaming source + scorer into parquet.  Re-running
     after the file grows must process only the appended lines (offsets
@@ -118,7 +139,7 @@ def test_cli_follow_streams_incrementally(spark, tmp_path, capsys):
     from kmeans_with_mapreduce_cuda_spark.__main__ import main
 
     src = tmp_path / "birch_follow.txt"
-    shutil.copyfile(BIRCH, src)
+    shutil.copyfile(birch_path, src)
     # trim to a known prefix so append counts are exact
     lines = src.read_text().splitlines()[:400]
     src.write_text("\n".join(lines) + "\n")

@@ -29,7 +29,7 @@ from kmeans_with_mapreduce_cuda_spark.sources.readers import (
     points_from_lineitem,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, SF_DIR_MED, broadcast_threshold
 
 
 @pytest.fixture(scope="module")
@@ -64,10 +64,77 @@ def numpy_lloyd(xy: np.ndarray, init, max_iter: int, tol: float = 1e-6):
 INIT4 = [(10.0, 20000.0), (25.0, 50000.0), (40.0, 80000.0), (15.0, 95000.0)]
 
 
-def test_golden_vs_numpy(points, xy):
-    got = np.array(lloyd_2d(points, INIT4, max_iter=8))
+#: the session's broadcast threshold (the fixture points fit under it:
+#: driver path) and -1 (the per-iteration SQL loop)
+LLOYD_PATHS = pytest.mark.parametrize(
+    "threshold", [None, "-1"], ids=["driver", "sql_loop"]
+)
+
+
+@LLOYD_PATHS
+def test_golden_vs_numpy(spark, points, xy, threshold):
+    with broadcast_threshold(spark, threshold):
+        got = np.array(lloyd_2d(points, INIT4, max_iter=8))
     exp = numpy_lloyd(xy, INIT4, max_iter=8)
     assert np.allclose(got, exp, rtol=1e-9, atol=1e-6), f"\n{got}\nvs\n{exp}"
+
+
+def test_lloyd_paths_equal_on_integer_points(spark):
+    """The driver path and the SQL loop return exactly equal centroids.
+    The sf0.01 points with the price in integer cents: every coordinate
+    is an integer, so every per-cluster sum is exact whatever order
+    either path adds in."""
+    from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
+        _fits_on_driver,
+    )
+
+    pts = points_from_lineitem(spark, SF_DIR_MED).select(
+        "x", F.round(F.col("y") * 100).alias("y")
+    ).cache()
+    init = [(10.0, 2_000_000.0), (25.0, 5_000_000.0), (40.0, 8_000_000.0)]
+    assert _fits_on_driver(pts)
+    driver = lloyd_2d(pts, init, max_iter=10, tol=0.0)
+    with broadcast_threshold(spark, "-1"):
+        assert not _fits_on_driver(pts)
+        sql_loop = lloyd_2d(pts, init, max_iter=10, tol=0.0)
+    assert driver == sql_loop
+    pts.unpersist()
+
+
+@LLOYD_PATHS
+def test_lloyd_null_and_empty_inputs(spark, threshold):
+    """A point with a NULL coordinate is skipped (on the SQL loop it
+    forms a NULL cluster_id group, which must not reach ``int()``), and
+    an empty input keeps every centroid."""
+    df = spark.createDataFrame(
+        [(1.0, 2.0), (None, 3.0), (5.0, 6.0), (7.0, 8.0)], "x double, y double"
+    )
+    init = [(0.0, 0.0), (6.0, 6.0)]
+    with broadcast_threshold(spark, threshold):
+        got = lloyd_2d(df, init, max_iter=5)
+        empty = lloyd_2d(df.where(F.lit(False)), init, max_iter=5)
+    assert got == [(1.0, 2.0), (6.0, 7.0)]
+    assert empty == init
+
+
+def test_lloyd_paths_agree_on_non_finite_points(spark):
+    """NaN and infinite coordinates follow Spark's double ordering on
+    both paths (NaN sorts above +inf): the NaN point drags its cluster's
+    mean to NaN, and no point is assigned to a NaN centroid afterwards
+    while a finite distance exists.  The SQL loop must render that NaN
+    centroid as a literal on the next iteration."""
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        [(1.0, 2.0), (nan, 3.0), (5.0, 6.0), (inf, 8.0), (0.0, 1.0)],
+        "x double, y double",
+    )
+    init = [(0.0, 0.0), (6.0, 6.0), (100.0, 100.0)]
+    got = []
+    for threshold in (None, "-1"):
+        with broadcast_threshold(spark, threshold):
+            got.append(np.array(lloyd_2d(df, init, max_iter=4, tol=-1.0)))
+    np.testing.assert_array_equal(got[0], got[1])
+    assert np.isnan(got[0]).any() and np.isfinite(got[0]).any()
 
 
 def test_sse_monotone(points):

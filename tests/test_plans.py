@@ -13,7 +13,7 @@ from kmeans_with_mapreduce_cuda_spark.operators.kmeans import assign_2d, update_
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
 from kmeans_with_mapreduce_cuda_spark.sources.readers import load_table, points_xy
 
-from conftest import SF_DIR
+from conftest import SF_DIR, broadcast_threshold
 
 INIT4 = [(10.0, 20000.0), (25.0, 50000.0), (40.0, 80000.0), (15.0, 95000.0)]
 
@@ -503,26 +503,52 @@ def test_runtime_bloom_filter_injection(spark):
 
 
 def test_lloyd_runs_one_job_per_iteration(spark):
-    """The scale contract of the iteration loop, asserted physically:
-    each Lloyd iteration is exactly ONE Spark job (assign+combine+k-row
-    reduce+collect), so per-iteration driver traffic is k rows and
-    total job count is linear in iterations -- no hidden extra actions
-    (recaching, size estimation, view re-materialization) sneak in."""
+    """The scale contract of the distributed iteration loop (the path
+    for points above the broadcast threshold, forced here with -1),
+    asserted physically: each Lloyd iteration is exactly ONE Spark job
+    (assign+combine+k-row reduce+collect), so per-iteration driver
+    traffic is k rows and total job count is linear in iterations -- no
+    hidden extra actions (recaching, size estimation, view
+    re-materialization) sneak in."""
     from kmeans_with_mapreduce_cuda_spark.operators.kmeans import lloyd_2d
 
     pts = points_xy(spark, SF_DIR).repartition(4).cache()
     pts.count()
     init = [(10.0, 20000.0), (25.0, 50000.0), (40.0, 80000.0)]
-    lloyd_2d(pts, init, max_iter=1, tol=0.0)  # warm; view already exists
+    with broadcast_threshold(spark, "-1"):
+        lloyd_2d(pts, init, max_iter=1, tol=0.0)  # warm; view already exists
 
-    sc = spark.sparkContext
-    sc.setJobGroup("lloyd-audit", "count jobs per iteration")
-    try:
-        lloyd_2d(pts, init, max_iter=5, tol=0.0)
-    finally:
-        sc.setJobGroup(None, None)
+        sc = spark.sparkContext
+        sc.setJobGroup("lloyd-audit", "count jobs per iteration")
+        try:
+            lloyd_2d(pts, init, max_iter=5, tol=0.0)
+        finally:
+            sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("lloyd-audit")
     assert len(jobs) == 5, jobs
+    pts.unpersist()
+
+
+def test_lloyd_driver_path_runs_one_job_per_fit(spark):
+    """Points under the broadcast threshold are collected once and
+    iterated on the driver: a fit is exactly ONE Spark job (the Arrow
+    collect) however many iterations it runs, and choosing the path
+    (plan statistics) launches none."""
+    from kmeans_with_mapreduce_cuda_spark.operators.kmeans import lloyd_2d
+
+    pts = points_xy(spark, SF_DIR).repartition(4).cache()
+    pts.count()
+    init = [(10.0, 20000.0), (25.0, 50000.0), (40.0, 80000.0)]
+    sc = spark.sparkContext
+    for iters in (5, 20):
+        group = f"lloyd-driver-audit-{iters}"
+        sc.setJobGroup(group, "count jobs per driver-path fit")
+        try:
+            lloyd_2d(pts, init, max_iter=iters, tol=-1.0)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, (iters, jobs)
     pts.unpersist()
 
 
