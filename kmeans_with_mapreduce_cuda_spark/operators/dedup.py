@@ -558,7 +558,6 @@ def connected_components(
     b: str = "doc_b",
     max_iter: int = 20,
     jump: bool = True,
-    small_graph: bool = False,
 ) -> "Components":
     """Resolve near-dup candidate PAIRS into duplicate CLUSTERS:
     iterative min-label propagation until fixpoint, returning
@@ -595,20 +594,6 @@ def connected_components(
     pair volumes LSH emits.  Each round's labels are persisted and
     the previous round's are dropped (the lloyd-loop contract) so
     lineage never re-executes.
-
-    ``small_graph=True`` (r10 optimization) runs the loop under the
-    ``operators.kmeans.iteration_confs`` discipline -- AQE off, 8
-    shuffle partitions, expression-level codegen -- for callers whose
-    edge list is DRIVER-MATERIALIZED by contract (every gate consumer
-    feeds this operator the `_eager`-collected, band-capped pair set,
-    so the label relation is collect-bounded at ANY corpus scale;
-    that bound, not the local core count, is what licenses the tiny
-    fixed partition count).  Per-round AQE re-planning costs ~0.1 s
-    x stages and buys nothing on a collect-bounded loop: measured at
-    sf0.1, the LSH graph's loop drops ~3.5 s -> ~1.9 s and the
-    survivors graph's ~4.0 s -> ~2.8 s.  Callers iterating over a
-    genuinely distributed edge list keep the default (False) and the
-    session's AQE/partition sizing.
 
     Round 1 is FREE (r10 optimization): at identity labels the
     neighbor messages are exactly the symmetric edge list and the
@@ -648,20 +633,6 @@ def connected_components(
     moved-label equi-join check instead -- correctness never depends
     on the id type.
     """
-    from contextlib import nullcontext
-
-    from .kmeans import iteration_confs
-
-    confs = (
-        iteration_confs(edges.sparkSession) if small_graph else nullcontext()
-    )
-    with confs:
-        return _connected_components_loop(edges, a, b, max_iter, jump)
-
-
-def _connected_components_loop(
-    edges: DataFrame, a: str, b: str, max_iter: int, jump: bool
-) -> "Components":
     # Persist the symmetric edge list PRE-PARTITIONED on the join key:
     # every round joins sym on src, and without this the edge list --
     # the data-scale side of the loop -- would be re-shuffled once per

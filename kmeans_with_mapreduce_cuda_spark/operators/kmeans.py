@@ -23,8 +23,9 @@ estimate for the points against spark.sql.autoBroadcastJoinThreshold
   analog of the reference's shared-memory block reduction, :108-139)
   keeps it at k * num_partitions rows, not N; exactly k rows cross to the
   driver per iteration, the reference's cluster_info D2H copy (:250-251).
-lloyd_nd, kmeans_step_2d and the seeding passes always take the Spark
-path.
+lloyd_nd and the seeding passes always take the Spark path.  Both
+Lloyd entry points share one driver loop (_lloyd) and differ only in
+the step function they hand it.
 
 Semantics choices (SURVEY.md §2.1 fine print): float means (the documented
 algorithm, README.md:43-61, not the racy block-partial reduce), ties to the
@@ -37,12 +38,12 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
-from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import stable_sample_key
+from ..session import session_confs
 
 #: 2-D centroids: ordered list of (x, y); index == cluster_id.
 Centroids2D = Sequence[tuple[float, float]]
@@ -50,53 +51,31 @@ Centroids2D = Sequence[tuple[float, float]]
 CentroidsND = Sequence[Sequence[float]]
 
 
+#: Session confs for the loops that plan one throwaway Spark job per pass
+#: (lloyd_2d's SQL path, lloyd_nd, farthest-point seeding, k-means||,
+#: mini-batch), applied with ``session_confs``: AQE off (its per-job
+#: re-planning costs ~0.15 s and buys nothing on a k-row shuffle), a
+#: narrow reduce stage (post-combine the shuffle carries k rows per map
+#: partition; 32 reduce tasks for 15 keys is pure task-launch overhead),
+#: and whole-stage codegen OFF: every iteration bakes new centroid
+#: literals into the plan, so each Janino compile (~0.3 s) is thrown away
+#: after one job -- expression-level codegen alone runs the 600k-row pass
+#: at the same speed without the per-iteration compile.  Measured on
+#: sf0.1: 0.62 -> 0.33 s/iteration cold (warm same-trajectory runs hit
+#: the Janino cache either way).  Session-global by design (Spark confs
+#: are session state), so the session must not plan unrelated queries
+#: concurrently during the loop -- true for every harness/gate/bench
+#: entry point, all single-threaded.
+ITERATION_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.codegen.wholeStage": "false",
+}
+
+
 # ---------------------------------------------------------------------------
 # Map stage: nearest-centroid assignment (O3 + O4)
 # ---------------------------------------------------------------------------
-
-@contextmanager
-def iteration_confs(spark, shuffle_partitions: int = 8):
-    """Loop-tuned session confs for the iterative path: AQE off (its
-    per-job re-planning costs ~0.15 s and buys nothing on a k-row
-    shuffle), a narrow reduce stage (post-combine the shuffle carries
-    k rows per map partition; 32 reduce tasks for 15 keys is pure task-
-    launch overhead), and whole-stage codegen OFF: every iteration bakes
-    new centroid literals into the plan, so each Janino compile
-    (~0.3 s) is thrown away after one job -- expression-level codegen
-    alone runs the 600k-row pass at the same speed without the per-
-    iteration compile.  Restores prior values on exit.  Measured on
-    sf0.1: 0.62 -> 0.33 s/iteration cold (warm same-trajectory runs hit
-    the Janino cache either way).
-
-    Session-global by design (Spark confs are session state), so two
-    rules guard it (r10 verdict item 7): the session must not plan
-    unrelated queries concurrently during the window (true for every
-    harness/gate/bench entry point -- all single-threaded), and nesting
-    is made SAFE rather than forbidden -- an inner ``iteration_confs``
-    becomes a no-op, so the OUTERMOST exit restores the true pre-loop
-    values instead of an inner exit "restoring" the loop confs as if
-    they were user state (the bug a naive save/restore has under
-    nesting, exception paths included).
-    """
-    already = getattr(spark, "_iteration_confs_active", False)
-    if already:
-        yield
-        return
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_ws = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark._iteration_confs_active = True
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        yield
-    finally:
-        spark._iteration_confs_active = False
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.codegen.wholeStage", old_ws)
-
 
 def _double_sql(v: float) -> str:
     """An exact double literal: CAST(repr AS DOUBLE) round-trips the
@@ -241,18 +220,6 @@ def update_nd(
 # One step + driver loop (O12)
 # ---------------------------------------------------------------------------
 
-def kmeans_step_2d(
-    points: DataFrame, centroids: Centroids2D, x: str = "x", y: str = "y"
-) -> list[tuple[float, float]]:
-    """One assign+update step; returns the new centroid list (k rows to
-    the driver -- the same tiny boundary as the reference's cluster_info
-    copy).  Empty clusters keep their previous centroid.
-    """
-    rows = update_2d(assign_2d(points, centroids, x, y), x, y).collect()
-    new = {int(r["cluster_id"]): (float(r["cx"]), float(r["cy"])) for r in rows}
-    return [new.get(i, tuple(map(float, centroids[i]))) for i in range(len(centroids))]
-
-
 def _step_sql_2d(view: str, centroids: Centroids2D, x: str, y: str) -> str:
     """One assign+update iteration as a single SQL statement over a temp
     view.  Same expressions as assign_2d/update_2d (same _dists_sql_2d
@@ -376,6 +343,22 @@ def _spark_step_2d(points: DataFrame, x: str, y: str):
     return step
 
 
+def _lloyd(step, init, max_iter: int, tol: float):
+    """Lloyd's driver loop: ``step`` maps the current centroids to
+    {cluster_id: new centroid} for the non-empty clusters; empty
+    clusters keep their previous centroid, and the loop stops once no
+    centroid moved more than ``tol``."""
+    cents = init
+    for _ in range(max_iter):
+        got = step(cents)
+        new = [got.get(i, c) for i, c in enumerate(cents)]
+        shift = max(math.dist(n, o) for n, o in zip(new, cents))
+        cents = new
+        if shift <= tol:
+            break
+    return cents
+
+
 def lloyd_2d(
     points: DataFrame,
     init: Centroids2D,
@@ -398,8 +381,9 @@ def lloyd_2d(
       with no per-iteration parse, plan or job;
     - above it (or with the threshold at -1), each iteration is one SQL
       statement, i.e. one Spark job, over ``points`` (cached by the
-      caller); the k new centroid literals are re-baked into the plan
-      each time, so lineage stays one stage deep.
+      caller), under ``ITERATION_CONFS``; the k new centroid literals
+      are re-baked into the plan each time, so lineage stays one stage
+      deep.
 
     Both compute the same double distances, ties to the lowest
     cluster_id, sum / count means and keep-previous empty clusters, so
@@ -408,21 +392,10 @@ def lloyd_2d(
     """
     cents = [tuple(map(float, c)) for c in init]
     if _fits_on_driver(points):
-        step, confs = _driver_step_2d(points, x, y), nullcontext()
-    else:
-        step, confs = _spark_step_2d(points, x, y), iteration_confs(points.sparkSession)
-    with confs:
-        for _ in range(max_iter):
-            got = step(cents)
-            new = [got.get(i, cents[i]) for i in range(len(cents))]
-            shift = max(
-                math.hypot(nx - ox, ny - oy)
-                for (nx, ny), (ox, oy) in zip(new, cents)
-            )
-            cents = new
-            if shift <= tol:
-                break
-    return cents
+        return _lloyd(_driver_step_2d(points, x, y), cents, max_iter, tol)
+    step = _spark_step_2d(points, x, y)
+    with session_confs(points.sparkSession, ITERATION_CONFS):
+        return _lloyd(step, cents, max_iter, tol)
 
 
 def _step_sql_nd(
@@ -444,6 +417,27 @@ def _step_sql_nd(
     """
 
 
+def _spark_step_nd(points: DataFrame, dim: int, features: str):
+    """The n-D twin of _spark_step_2d: one _step_sql_nd statement (one
+    Spark job) per call, returning {cluster_id: centroid} for non-empty
+    clusters; the NULL group (rows with a NULL embedding) is skipped."""
+    spark = points.sparkSession
+    # not dropped afterwards -- see _spark_step_2d for why (dropTempView
+    # invalidates the caller's cache buffers)
+    view = f"_lloydnd_pts_{id(points)}"
+    points.createOrReplaceTempView(view)
+
+    def step(cents):
+        rows = spark.sql(_step_sql_nd(view, cents, dim, features)).collect()
+        return {
+            int(r["cluster_id"]): [float(r[f"c{i}"]) for i in range(dim)]
+            for r in rows
+            if r["cluster_id"] is not None
+        }
+
+    return step
+
+
 def lloyd_nd(
     points: DataFrame,
     init: CentroidsND,
@@ -451,44 +445,23 @@ def lloyd_nd(
     tol: float = 1e-6,
     features: str = "embedding",
 ) -> list[list[float]]:
-    """n-D Lloyd loop over an array column (single-SQL step per
-    iteration, see _step_sql_2d for why)."""
-    spark = points.sparkSession
+    """n-D Lloyd loop over an array column: one SQL statement (one Spark
+    job) per iteration, see _step_sql_2d for why.  Rows with a NULL
+    embedding are skipped."""
     cents = [list(map(float, c)) for c in init]
-    dim = len(cents[0])
-    # not dropped afterwards -- see lloyd_2d for why (dropTempView
-    # invalidates the caller's cache buffers)
-    view = f"_lloydnd_pts_{id(points)}"
-    points.createOrReplaceTempView(view)
-    with iteration_confs(spark):
-        for _ in range(max_iter):
-            rows = spark.sql(
-                _step_sql_nd(view, cents, dim, features)
-            ).collect()
-            new_map = {
-                int(r["cluster_id"]): [
-                    float(r[f"c{i}"]) for i in range(dim)
-                ]
-                for r in rows
-            }
-            new = [new_map.get(i, cents[i]) for i in range(len(cents))]
-            shift = max(
-                math.sqrt(sum((a - b) ** 2 for a, b in zip(nc, oc)))
-                for nc, oc in zip(new, cents)
-            )
-            cents = new
-            if shift <= tol:
-                break
-    return cents
+    step = _spark_step_nd(points, len(cents[0]), features)
+    with session_confs(points.sparkSession, ITERATION_CONFS):
+        return _lloyd(step, cents, max_iter, tol)
 
 
 def sse_2d(
     points: DataFrame, centroids: Centroids2D, x: str = "x", y: str = "y"
 ) -> float:
     """Sum of squared distances to assigned centroids (Lloyd's monotone
-    objective -- the property tests assert it never increases)."""
+    objective -- the property tests assert it never increases).  0.0 on
+    an empty input."""
     a = assign_2d(points, centroids, x, y, keep_dist=True)
-    return float(a.agg(F.sum("_mindist")).collect()[0][0])
+    return float(a.agg(F.sum("_mindist")).collect()[0][0] or 0.0)
 
 
 # ---------------------------------------------------------------------------
@@ -529,12 +502,12 @@ def seed_centroids_farthest(
     Cost: k narrow scans, each ending in one max_by aggregate (partial
     agg -> 1 row per partition -> 1 row to the driver).  Nothing but k
     rows ever leaves the executors, so the 100 TB path is k passes over
-    a cached projection.  The loop runs under ``iteration_confs`` --
+    a cached projection.  The loop runs under ``ITERATION_CONFS`` --
     the lloyd_2d discipline (r10): every pass bakes fresh centroid
     literals into a throwaway plan and ends in a 1-row aggregate, so
     per-pass AQE re-planning and Janino compiles are pure overhead.
     """
-    with iteration_confs(points.sparkSession):
+    with session_confs(points.sparkSession, ITERATION_CONFS):
         first = points.select(key, x, y).orderBy(key).limit(1).collect()[0]
         cents: list[tuple[float, float]] = [(float(first[x]), float(first[y]))]
         for _ in range(k - 1):

@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
-from ..operators.kmeans import assign_2d, update_2d
+from ..operators.kmeans import ITERATION_CONFS, assign_2d, update_2d
+from ..session import session_confs
 from ..sources.readers import points_from_lineitem_cached
 from .registry import (
     INIT_CENTROIDS_2D,
@@ -970,8 +971,6 @@ _KPP_ORACLE = (
     "17-28) with the seeding you would actually run on a cluster.",
 )
 def o02_seed_kmeanspp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import iteration_confs
-
     p = _points(spark, sf_dir).where(F.col("id") <= 20000)
     pts = p.select(
         "id",
@@ -980,10 +979,10 @@ def o02_seed_kmeanspp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("x"), 0).cast("bigint").alias("xi"),
         F.round(F.col("y") * 100, 0).cast("bigint").alias("yi"),
     ).persist()
-    # iteration confs (the lloyd_2d discipline, r10): each round bakes
+    # ITERATION_CONFS (the lloyd_2d discipline, r10): each round bakes
     # fresh center literals into a throwaway plan and collects <= l+1
     # rows, so per-job AQE re-planning and Janino compiles buy nothing.
-    with iteration_confs(spark):
+    with session_confs(spark, ITERATION_CONFS):
         return _o02_seed_kmeanspp_body(spark, pts)
 
 
@@ -1142,14 +1141,12 @@ def _minibatch_sql() -> str:
     "the sublinear refinement you would run when one pass is hours.",
 )
 def o12_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import iteration_confs
-
     p = _points(spark, sf_dir)
     # state rows: (cluster_id, cx, cy, n_seen) -- driver-side, k rows
     state: list[tuple[int, float, float, int]] = [
         (i, cx, cy, 0) for i, (cx, cy) in enumerate(INIT_CENTROIDS_2D)
     ]
-    with iteration_confs(spark):
+    with session_confs(spark, ITERATION_CONFS):
         state = _o12_minibatch_rounds(p, state)
     return spark.createDataFrame(
         state, "cluster_id int, cx double, cy double, n_seen bigint"
@@ -1157,7 +1154,7 @@ def o12_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o12_minibatch_rounds(p, state):
-    """The mini-batch rounds, run under iteration_confs (the lloyd_2d
+    """The mini-batch rounds, run under ITERATION_CONFS (the lloyd_2d
     discipline, r10): each round bakes the previous state into literal
     arrays and collects k rows -- per-job AQE re-planning and Janino
     compiles are throwaway overhead."""

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_long_sql
 from ..functions.text import STOPWORDS, tokens
 from ..operators.dedup import simhash16_sql, token_hashes_sql
+from ..session import session_confs
 from ..sources.readers import load_table
 from . import registry
 from .registry import query
@@ -2249,6 +2250,10 @@ def sim_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: memory-sink names must be unique per session; deterministic counter.
 _STREAM_RUNS = iter(range(1_000_000))
 
+#: gate sizing for the streaming queries' shuffles (see
+#: _drain_stream_to_table for the measurement)
+_STREAM_SHUFFLE = {"spark.sql.shuffle.partitions": "2"}
+
 
 def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame:
     """Build a streaming DataFrame (``build``: zero-arg callable) and run
@@ -2268,7 +2273,7 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
 
     Timezone: the streaming queries format event-time windows to strings
     (tz-dependent), so UTC is pinned for the drain and restored in the
-    same finally as shuffle.partitions (round-3 advice: a bare set()
+    same scope as shuffle.partitions (round-3 advice: a bare set()
     permanently mutated the shared gate/test session).  The DataFrame is
     constructed INSIDE the pin via the ``build`` callable -- Spark
     resolves session.timeZone into TimeZoneAware expressions at analysis
@@ -2277,11 +2282,9 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
     and the pin would silently not apply.
     """
     name = f"{prefix}{next(_STREAM_RUNS)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with session_confs(
+        spark, {**_STREAM_SHUFFLE, "spark.sql.session.timeZone": "UTC"}
+    ):
         df = build()
         q = (
             df.writeStream.format("memory")
@@ -2291,9 +2294,6 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
             .start()
         )
         _await_drain(q, f"stream {name}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
     return spark.table(name)
 
 
@@ -2363,25 +2363,20 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Same oracle as stream_session_windows by contract: the provider "
     "changes the memory/checkpoint profile, never the result; this "
     "gate row makes that claim driver-hash-checked rather than only "
-    "unit-tested.  The provider conf applies to queries STARTED after "
-    "the set and is restored afterward, so neighboring gate queries "
+    "unit-tested.  The provider confs apply to queries STARTED after "
+    "the set and are restored afterward, so neighboring gate queries "
     "keep the default provider.",
 )
 def stream_session_windows_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_events_stream, session_window_stream
-    from ..streaming.streams import use_rocksdb_state
+    from ..streaming.streams import rocksdb_state_confs
 
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
-    try:
-        use_rocksdb_state(spark)
+    with session_confs(spark, rocksdb_state_confs()):
         return _drain_stream_to_table(
             spark,
             lambda: session_window_stream(read_events_stream(spark, sf_dir)),
             "_gate_sessionwin_rocks_",
         )
-    finally:
-        spark.conf.set(conf, old)
 
 
 @query(
@@ -3386,8 +3381,9 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate edges are pair-scale small (collect-bounded by the
     # stage-1/2 caps); collect them once, release the build's persisted
     # intermediates, and resolve the min-label fixpoint with a driver
-    # union-find (r11: the distributed small_graph loop spent 2.8-5.2 s
-    # of fixed job latency on a 540-edge graph; see dedup_components).
+    # union-find (r11: the distributed connected_components loop spent
+    # 2.8-5.2 s of fixed job latency on a 540-edge graph; see
+    # dedup_components).
     # Only the LOSERS -- bounded by the pair graph's node count, never
     # corpus-scale -- go back out, as a broadcast anti-join, so the
     # corpus side still never shuffles.
@@ -3610,17 +3606,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.streams import (
-        CHANGELOG_CONF,
         dedup_stream,
         read_events_stream,
-        use_rocksdb_state,
+        rocksdb_state_confs,
     )
 
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov)
-    old_chlog = spark.conf.get(CHANGELOG_CONF, None)
-    try:
-        use_rocksdb_state(spark, changelog=True)
+    with session_confs(spark, rocksdb_state_confs(changelog=True)):
         return _drain_stream_to_table(
             spark,
             lambda: dedup_stream(
@@ -3629,12 +3620,6 @@ def stream_dedup_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFram
             ).select("user_id", "event_type"),
             "_gate_dedup_chlog_",
         )
-    finally:
-        spark.conf.set(prov, old_prov)
-        if old_chlog is None:
-            spark.conf.unset(CHANGELOG_CONF)
-        else:
-            spark.conf.set(CHANGELOG_CONF, old_chlog)
 
 
 @query(
@@ -3748,7 +3733,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _eager contract since r5); once its rows are on the driver, the
     # min-label fixpoint is a union-find, not 4+ Spark jobs per
     # propagation round over a 1294-edge graph (r11: the distributed
-    # small_graph loop cost 2.0-2.6 s of pure fixed job latency here;
+    # connected_components loop cost 2.0-2.6 s of fixed job latency here;
     # corpus-scale edge lists -- curate.py -- keep the distributed
     # operator).
     try:
@@ -5040,30 +5025,28 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="_gate_upsert_")
     state = f"{root}/state"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        ev = read_events_stream(spark, sf_dir).select(
-            "user_id", "ts", "event_id", "value"
-        )
-        q = (
-            ev.writeStream.foreachBatch(
-                upsert_latest_foreach_batch(spark, state)
+        with session_confs(spark, _STREAM_SHUFFLE):
+            ev = read_events_stream(spark, sf_dir).select(
+                "user_id", "ts", "event_id", "value"
             )
-            .option("checkpointLocation", f"{root}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q, "upsert stream")
-        final = spark.read.parquet(state).select(
-            "user_id",
-            F.unix_micros("ts").alias("last_ts_us"),
-            F.col("value").alias("last_value"),
-        )
-        return _eager(spark, final)
+            q = (
+                ev.writeStream.foreachBatch(
+                    upsert_latest_foreach_batch(spark, state)
+                )
+                .option("checkpointLocation", f"{root}/ckpt")
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_drain(q, "upsert stream")
+            final = spark.read.parquet(state).select(
+                "user_id",
+                F.unix_micros("ts").alias("last_ts_us"),
+                F.col("value").alias("last_value"),
+            )
+            return _eager(spark, final)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -5095,41 +5078,39 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.streams import read_events_stream
 
     root = tempfile.mkdtemp(prefix="_gate_statereader_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        ev = read_events_stream(spark, sf_dir).select("user_id")
-        agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(f"_gate_statereader_{next(_STREAM_RUNS)}")
-            .outputMode("update")
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q, "state-reader stream")
-        try:
-            st = spark.read.format("statestore").load(f"{root}/ckpt")
-        except Exception as exc:
-            # An empty source commits no micro-batch, so the checkpoint
-            # has no state version to read -- that's an empty state,
-            # not an error.  Anything else propagates.
-            if "STDS_COMMITTED_BATCH_UNAVAILABLE" not in str(exc):
-                raise
-            # lit(NULL) casts: nullable bigints, matching the schema the
-            # statestore read yields (struct-field access is nullable).
-            return spark.range(0).select(
-                F.lit(None).cast("bigint").alias("user_id"),
-                F.lit(None).cast("bigint").alias("n_events"),
+        with session_confs(spark, _STREAM_SHUFFLE):
+            ev = read_events_stream(spark, sf_dir).select("user_id")
+            agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(f"_gate_statereader_{next(_STREAM_RUNS)}")
+                .outputMode("update")
+                .option("checkpointLocation", f"{root}/ckpt")
+                .trigger(availableNow=True)
+                .start()
             )
-        out = st.select(
-            F.col("key.user_id").alias("user_id"),
-            F.col("value.count").alias("n_events"),
-        )
-        return _eager(spark, out)
+            _await_drain(q, "state-reader stream")
+            try:
+                st = spark.read.format("statestore").load(f"{root}/ckpt")
+            except Exception as exc:
+                # An empty source commits no micro-batch, so the checkpoint
+                # has no state version to read -- that's an empty state,
+                # not an error.  Anything else propagates.
+                if "STDS_COMMITTED_BATCH_UNAVAILABLE" not in str(exc):
+                    raise
+                # lit(NULL) casts: nullable bigints, matching the schema the
+                # statestore read yields (struct-field access is nullable).
+                return spark.range(0).select(
+                    F.lit(None).cast("bigint").alias("user_id"),
+                    F.lit(None).cast("bigint").alias("n_events"),
+                )
+            out = st.select(
+                F.col("key.user_id").alias("user_id"),
+                F.col("value.count").alias("n_events"),
+            )
+            return _eager(spark, out)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -5162,24 +5143,22 @@ def stream_tokenizer_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab_map = _tokenizer_vocab_map(d)
     root = tempfile.mkdtemp(prefix="_gate_tok_stream_")
     out = f"{root}/encoded"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        enc = read_documents_stream(spark, sf_dir).select(
-            *_tokenizer_encode_cols(vocab_map)
-        )
-        q = (
-            enc.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q, "tokenizer stream")
-        return _eager(spark, spark.read.parquet(out))
+        with session_confs(spark, _STREAM_SHUFFLE):
+            enc = read_documents_stream(spark, sf_dir).select(
+                *_tokenizer_encode_cols(vocab_map)
+            )
+            q = (
+                enc.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", f"{root}/ckpt")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_drain(q, "tokenizer stream")
+            return _eager(spark, spark.read.parquet(out))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -7527,72 +7506,70 @@ def stream_compaction_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="_gate_compact_")
     out = f"{root}/ingested"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        ev = read_events_stream(spark, sf_dir).select(
-            "event_id", "event_type", "value"
-        )
-
-        def write_small(batch_df: DataFrame, batch_id: int) -> None:
-            # 16-way round-robin per batch: the small-file smell,
-            # manufactured deterministically
-            batch_df.repartition(16).write.mode("append").parquet(out)
-
-        q = (
-            ev.writeStream.foreachBatch(write_small)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q, "compaction ingest stream")
-        n_before = len(glob.glob(f"{out}/*.parquet"))
-        if n_before == 0:
-            # empty stream: foreachBatch never wrote -- nothing to
-            # compact, typed empty result (empty-partition robustness)
-            from pyspark.sql.types import (
-                BooleanType,
-                LongType,
-                StringType,
-                StructField,
-                StructType,
+        with session_confs(spark, _STREAM_SHUFFLE):
+            ev = read_events_stream(spark, sf_dir).select(
+                "event_id", "event_type", "value"
             )
 
-            return spark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField("event_type", StringType(), True),
-                        StructField("n", LongType(), False),
-                        StructField("sum_mills", LongType(), True),
-                        StructField(
-                            "compaction_reduced_files", BooleanType(), False
-                        ),
-                    ]
-                ),
+            def write_small(batch_df: DataFrame, batch_id: int) -> None:
+                # 16-way round-robin per batch: the small-file smell,
+                # manufactured deterministically
+                batch_df.repartition(16).write.mode("append").parquet(out)
+
+            q = (
+                ev.writeStream.foreachBatch(write_small)
+                .option("checkpointLocation", f"{root}/ckpt")
+                .trigger(availableNow=True)
+                .start()
             )
-        n_target = compact_small_files(
-            spark, out, target_file_bytes=128 * 1024 * 1024
-        )
-        n_after = len(glob.glob(f"{out}/*.parquet"))
-        agg = (
-            spark.read.parquet(out)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.round(F.col("value") * 1000).cast("bigint")
-                ).alias("sum_mills"),
+            _await_drain(q, "compaction ingest stream")
+            n_before = len(glob.glob(f"{out}/*.parquet"))
+            if n_before == 0:
+                # empty stream: foreachBatch never wrote -- nothing to
+                # compact, typed empty result (empty-partition robustness)
+                from pyspark.sql.types import (
+                    BooleanType,
+                    LongType,
+                    StringType,
+                    StructField,
+                    StructType,
+                )
+
+                return spark.createDataFrame(
+                    [],
+                    StructType(
+                        [
+                            StructField("event_type", StringType(), True),
+                            StructField("n", LongType(), False),
+                            StructField("sum_mills", LongType(), True),
+                            StructField(
+                                "compaction_reduced_files", BooleanType(), False
+                            ),
+                        ]
+                    ),
+                )
+            n_target = compact_small_files(
+                spark, out, target_file_bytes=128 * 1024 * 1024
             )
-            .withColumn(
-                "compaction_reduced_files",
-                F.lit(bool(n_after == n_target and n_after < n_before)),
+            n_after = len(glob.glob(f"{out}/*.parquet"))
+            agg = (
+                spark.read.parquet(out)
+                .groupBy("event_type")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(
+                        F.round(F.col("value") * 1000).cast("bigint")
+                    ).alias("sum_mills"),
+                )
+                .withColumn(
+                    "compaction_reduced_files",
+                    F.lit(bool(n_after == n_target and n_after < n_before)),
+                )
             )
-        )
-        # materialize BEFORE the finally removes the compacted table
-        return _eager(spark, agg)
+            # materialize BEFORE the finally removes the compacted table
+            return _eager(spark, agg)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(root, ignore_errors=True)
 
 

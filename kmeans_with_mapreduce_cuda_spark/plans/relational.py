@@ -6,12 +6,11 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import session_confs
 from ..sources.readers import load_table
 from .registry import query
 
@@ -4511,7 +4510,7 @@ def rel_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(default 10 GB -- the conf models the 100 TB fact side), so the "
     "query pins applicationSideScanSizeThreshold=0 and disables "
     "broadcast for the build (injection targets shuffle joins), "
-    "restoring both in a finally -- which requires materializing "
+    "restoring both on exit -- which requires materializing "
     "BEFORE return.  The returned relation is therefore BOUNDED: "
     "top-100 heaviest urgent orders via orderBy+limit (merge heaps, "
     "TakeOrderedAndProject -- plan-asserted), so the collect inside "
@@ -4527,35 +4526,19 @@ def rel_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("sum_qty"), F.asc("l_orderkey"))
         .limit(100)
     )
-    with bloom_confs_pinned(spark):
+    with session_confs(spark, _BLOOM_CONFS):
         rows = out.collect()  # bounded: <=100 rows by construction
     return spark.createDataFrame(rows, out.schema)
 
 
+#: The confs under which InjectRuntimeFilter fires locally -- ONE
+#: definition shared by the gate query and its plan-assertion test, so
+#: the test always asserts the exact optimizer state the query runs under.
 _BLOOM_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.optimizer.runtime.bloomFilter"
     ".applicationSideScanSizeThreshold": "0",
 }
-
-
-@contextmanager
-def bloom_confs_pinned(spark: SparkSession):
-    """Pin the confs under which InjectRuntimeFilter fires locally --
-    ONE definition shared by the gate query and its plan-assertion test,
-    so the test always asserts the exact optimizer state the query runs
-    under."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _bloom_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,8 @@ shuffle partitions sized to the parallelism.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -82,6 +84,26 @@ def get_spark(
         .config("spark.executor.extraJavaOptions", _merged_java_options())
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then put every key back
+    as it was, on the exception path too: a key that was unset before is
+    unset again, any other gets its old value.  The saved values belong
+    to this call, so nested blocks restore correctly.  Confs are session
+    state: nothing else may plan on the session while the block runs."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _CODEGEN_JVM_OPTS = "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m"

@@ -417,13 +417,18 @@ ROCKSDB_PROVIDER = (
 )
 
 
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
 CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
 
 
-def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
-    """Switch stateful streaming to the RocksDB state store provider.
+def rocksdb_state_confs(changelog: bool = False) -> dict[str, str]:
+    """Session confs that switch stateful streaming to the RocksDB state
+    store provider; apply them with ``session.session_confs`` around the
+    queries that should use it.
 
     The default HDFS-backed provider keeps every key's state in executor
     HEAP with full-file checkpoint uploads -- fine for the fixture-sized
@@ -432,8 +437,8 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
     incrementally, and bounds memory via block cache: it is THE provider
     choice for large-state production streams.  Results are
     provider-independent (asserted in tests/test_streaming.py); only the
-    memory/checkpoint profile changes.  Applies to queries STARTED after
-    the call.
+    memory/checkpoint profile changes.  Applies to queries STARTED while
+    the confs are set.
 
     ``changelog=True`` additionally enables CHANGELOG checkpointing:
     each commit uploads only the batch's key deltas (``N.changelog``)
@@ -446,13 +451,13 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
     full-snapshot zips) appear in the checkpoint's state dir while the
     drained result stays byte-identical.
     """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    # set BOTH ways: changelog=False must actively clear a prior
-    # changelog=True call on the shared session, or the signature would
-    # lie to later callers (code-review r5 finding)
-    spark.conf.set(CHANGELOG_CONF, "true" if changelog else "false")
+    # set BOTH ways: changelog=False must actively clear an enclosing
+    # changelog=True scope, or the signature would lie to its caller
+    # (code-review r5 finding)
+    return {
+        PROVIDER_CONF: ROCKSDB_PROVIDER,
+        CHANGELOG_CONF: "true" if changelog else "false",
+    }
 
 
 def session_window_stream(

@@ -1,31 +1,23 @@
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import duckdb
 import pytest
 
 from kmeans_with_mapreduce_cuda_spark import get_spark
+from kmeans_with_mapreduce_cuda_spark.session import session_confs
 from kmeans_with_mapreduce_cuda_spark.sources.readers import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
 
 
-@contextmanager
 def broadcast_threshold(spark, value: str | None):
     """Run the block under ``spark.sql.autoBroadcastJoinThreshold =
     value`` (``None``: leave the session's own), restoring it on exit.
     ``lloyd_2d`` collects points under the threshold and runs one SQL
     job per iteration above it, so ``"-1"`` forces the SQL loop."""
     key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return session_confs(spark, {} if value is None else {key: value})
 
 
 @pytest.fixture(scope="session")

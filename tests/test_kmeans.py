@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
     assign_2d,
-    kmeans_step_2d,
     lloyd_2d,
     lloyd_nd,
     seed_centroids_2d,
@@ -66,8 +65,9 @@ INIT4 = [(10.0, 20000.0), (25.0, 50000.0), (40.0, 80000.0), (15.0, 95000.0)]
 
 #: the session's broadcast threshold (the fixture points fit under it:
 #: driver path) and -1 (the per-iteration SQL loop)
+LLOYD_THRESHOLDS = (None, "-1")
 LLOYD_PATHS = pytest.mark.parametrize(
-    "threshold", [None, "-1"], ids=["driver", "sql_loop"]
+    "threshold", LLOYD_THRESHOLDS, ids=["driver", "sql_loop"]
 )
 
 
@@ -137,14 +137,16 @@ def test_lloyd_paths_agree_on_non_finite_points(spark):
     assert np.isnan(got[0]).any() and np.isfinite(got[0]).any()
 
 
-def test_sse_monotone(points):
-    cents = INIT4
-    prev = sse_2d(points, cents)
-    for _ in range(5):
-        cents = kmeans_step_2d(points, cents)
-        cur = sse_2d(points, cents)
-        assert cur <= prev + 1e-6
-        prev = cur
+def test_sse_monotone(spark, points):
+    for threshold in LLOYD_THRESHOLDS:
+        cents = INIT4
+        prev = sse_2d(points, cents)
+        for _ in range(5):
+            with broadcast_threshold(spark, threshold):
+                cents = lloyd_2d(points, cents, max_iter=1)
+            cur = sse_2d(points, cents)
+            assert cur <= prev + 1e-6
+            prev = cur
 
 
 def test_every_point_assigned_once(points):
@@ -171,18 +173,22 @@ def test_permutation_invariance(points, spark):
     """Row order must not change the result (the reference's thrust sort
     is non-stable for the same reason)."""
     shuffled = points.orderBy(F.md5(F.col("id").cast("string")))
-    a = kmeans_step_2d(points, INIT4)
-    b = kmeans_step_2d(shuffled, INIT4)
-    assert np.allclose(np.array(a), np.array(b), rtol=1e-9)
+    for threshold in LLOYD_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            a = lloyd_2d(points, INIT4, max_iter=1)
+            b = lloyd_2d(shuffled, INIT4, max_iter=1)
+        assert np.allclose(np.array(a), np.array(b), rtol=1e-9)
 
 
-def test_empty_cluster_keeps_previous(points):
+def test_empty_cluster_keeps_previous(spark, points):
     """A centroid far outside the bounding box gets no points and must
     survive unchanged."""
     far = (1e9, 1e9)
     cents = INIT4 + [far]
-    new = kmeans_step_2d(points, cents)
-    assert new[-1] == far
+    for threshold in LLOYD_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            new = lloyd_2d(points, cents, max_iter=1)
+        assert new[-1] == far
 
 
 def test_tie_breaks_to_lowest_id(spark):
@@ -207,9 +213,16 @@ def test_seed_deterministic(points):
 
 
 def test_lloyd_nd_embeddings(spark):
+    """A row with a NULL embedding is skipped (it forms a NULL cluster_id
+    group, which must not reach ``int()``)."""
     emb = load_table(spark, SF_DIR, "embeddings").cache()
     init = seed_centroids_nd(emb, k=4, seed=42)
-    cents = lloyd_nd(emb, init, max_iter=3)
+    null_row = emb.limit(1).withColumn(
+        "embedding", F.lit(None).cast(emb.schema["embedding"].dataType)
+    )
+    cents = lloyd_nd(emb.unionByName(null_row), init, max_iter=3)
+    without_null = lloyd_nd(emb, init, max_iter=3)
+    np.testing.assert_allclose(cents, without_null, rtol=1e-9)
     assert len(cents) == 4
     assert all(len(c) == 64 for c in cents)
     assert all(math.isfinite(v) for c in cents for v in c)
@@ -250,13 +263,18 @@ def test_mllib_parity_with_primitive_path(spark):
 
 def test_assign_k1_and_empty_input(spark, points):
     """Degenerate shapes: k=1 assigns everything to cluster 0; an empty
-    input yields an empty assignment and a step that keeps all centroids."""
+    input yields an empty assignment, a step that keeps all centroids and
+    an SSE of 0."""
     one = assign_2d(points, [(0.0, 0.0)])
     assert one.where(F.col("cluster_id") != 0).count() == 0
 
     empty = points.where(F.lit(False))
     assert assign_2d(empty, INIT4).count() == 0
-    assert kmeans_step_2d(empty, INIT4) == [tuple(c) for c in INIT4]
+    for threshold in LLOYD_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            step = lloyd_2d(empty, INIT4, max_iter=1)
+        assert step == [tuple(c) for c in INIT4]
+    assert sse_2d(empty, INIT4) == 0.0
 
 
 def test_lloyd_zero_iterations_returns_init(points):
@@ -400,39 +418,3 @@ def test_kmeanspp_acceptance_collect_is_structurally_bounded(spark, monkeypatch)
     monkeypatch.setattr(kq, "_KPP_ACCEPT_CAP", 0)
     with pytest.raises(RuntimeError, match="k-means\\|\\| round"):
         kq.o02_seed_kmeanspp(spark, SF_DIR)
-
-
-def test_iteration_confs_nesting_and_exception_restore(spark):
-    """iteration_confs must restore the TRUE pre-loop confs when nested
-    (r10 verdict item 7): an inner use is a no-op and only the outermost
-    exit restores, including on the exception path -- a naive
-    save/restore would have the inner exit reinstate the LOOP confs as
-    if they were user state."""
-    from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
-        iteration_confs,
-    )
-
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    with iteration_confs(spark, shuffle_partitions=8):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        with iteration_confs(spark, shuffle_partitions=4):
-            # inner is a no-op: the outer window's values stay
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-        # inner exit must NOT have restored anything
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp
-
-    class Boom(Exception):
-        pass
-
-    try:
-        with iteration_confs(spark):
-            with iteration_confs(spark):
-                raise Boom()
-    except Boom:
-        pass
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp

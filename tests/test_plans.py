@@ -1341,11 +1341,12 @@ def test_bloom_filter_join_injects_might_contain(spark):
     bloom_filter_agg on the selective side -- row-level runtime
     pruning, not just a plain shuffle join."""
     from kmeans_with_mapreduce_cuda_spark.plans.relational import (
+        _BLOOM_CONFS,
         _bloom_join_plan,
-        bloom_confs_pinned,
     )
+    from kmeans_with_mapreduce_cuda_spark.session import session_confs
 
-    with bloom_confs_pinned(spark):
+    with session_confs(spark, _BLOOM_CONFS):
         plan = plan_of(_bloom_join_plan(spark, SF_DIR))
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan, plan
@@ -1357,7 +1358,7 @@ def test_bloom_filter_join_injects_might_contain(spark):
     # top-100 via orderBy+limit must plan as TakeOrderedAndProject
     # (per-partition heaps merged on the driver, never a global sort),
     # and the bloom must still be injected underneath the top-k.
-    with bloom_confs_pinned(spark):
+    with session_confs(spark, _BLOOM_CONFS):
         bounded = plan_of(
             _bloom_join_plan(spark, SF_DIR)
             .orderBy(F.desc("sum_qty"), F.asc("l_orderkey"))

@@ -8,6 +8,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+from kmeans_with_mapreduce_cuda_spark.session import session_confs
 from kmeans_with_mapreduce_cuda_spark.sources.readers import load_table
 from kmeans_with_mapreduce_cuda_spark.streaming import (
     hourly_counts_stream,
@@ -287,27 +288,23 @@ def test_rocksdb_state_store_matches_default(spark):
     windowed aggregation."""
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
+        PROVIDER_CONF,
         ROCKSDB_PROVIDER,
-        use_rocksdb_state,
+        rocksdb_state_confs,
     )
 
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
     base = {
         tuple(r)
         for r in REGISTRY["stream_hourly_counts"].fn(spark, SF_DIR).collect()
     }
-    try:
-        use_rocksdb_state(spark)
-        assert spark.conf.get(conf) == ROCKSDB_PROVIDER
+    with session_confs(spark, rocksdb_state_confs()):
+        assert spark.conf.get(PROVIDER_CONF) == ROCKSDB_PROVIDER
         rocks = {
             tuple(r)
             for r in REGISTRY["stream_hourly_counts"]
             .fn(spark, SF_DIR)
             .collect()
         }
-    finally:
-        spark.conf.set(conf, old)
     assert rocks == base
 
 
@@ -367,29 +364,53 @@ def test_rocksdb_state_store_matches_default_session_windows(spark):
     must be byte-equal under both providers."""
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
+        PROVIDER_CONF,
         ROCKSDB_PROVIDER,
-        use_rocksdb_state,
+        rocksdb_state_confs,
     )
 
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
     base = {
         tuple(r)
         for r in REGISTRY["stream_session_windows"].fn(spark, SF_DIR).collect()
     }
     assert base  # non-trivial: sessions actually emitted
-    try:
-        use_rocksdb_state(spark)
-        assert spark.conf.get(conf) == ROCKSDB_PROVIDER
+    with session_confs(spark, rocksdb_state_confs()):
+        assert spark.conf.get(PROVIDER_CONF) == ROCKSDB_PROVIDER
         rocks = {
             tuple(r)
             for r in REGISTRY["stream_session_windows"]
             .fn(spark, SF_DIR)
             .collect()
         }
-    finally:
-        spark.conf.set(conf, old)
     assert rocks == base
+
+
+def test_rocksdb_gate_query_restores_both_state_confs(spark):
+    """stream_session_windows_rocksdb scopes BOTH keys it sets: the
+    provider and the changelog flag read the same after the query as
+    before, whether they were set beforehand or unset."""
+    from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+    from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
+        CHANGELOG_CONF,
+        PROVIDER_CONF,
+    )
+
+    run = REGISTRY["stream_session_windows_rocksdb"].fn
+    keys = (PROVIDER_CONF, CHANGELOG_CONF)
+    default_provider = spark.conf.get(PROVIDER_CONF)
+    # the outer scope puts back whatever the session had on exit
+    with session_confs(
+        spark, {PROVIDER_CONF: default_provider, CHANGELOG_CONF: "true"}
+    ):
+        run(spark, SF_DIR).collect()
+        assert [spark.conf.get(k, None) for k in keys] == [
+            default_provider,
+            "true",
+        ]
+        for k in keys:
+            spark.conf.unset(k)
+        run(spark, SF_DIR).collect()
+        assert [spark.conf.get(k, None) for k in keys] == [None, None]
 
 
 def test_streaming_gate_queries_pin_utc_regardless_of_session_tz(spark):
@@ -708,7 +729,7 @@ def test_state_metadata_reader_describes_the_operator(spark, tmp_path):
     assert [tuple(r) for r in md] == [("stateStoreSave", "default", 2)]
 
 
-def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
+def test_rocksdb_changelog_checkpointing_writes_deltas(spark, tmp_path):
     """Changelog checkpointing (VERDICT r4 optional item): under
     RocksDB + changelogCheckpointing, each commit must upload key
     DELTAS (N.changelog files) instead of full SST snapshot zips, and
@@ -717,7 +738,6 @@ def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
     ignored conf would leave zips and no changelogs."""
     import glob
     import os
-    import tempfile
 
     from kmeans_with_mapreduce_cuda_spark.streaming import (
         read_events_stream,
@@ -725,18 +745,16 @@ def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
         CHANGELOG_CONF,
         dedup_stream,
-        use_rocksdb_state,
+        rocksdb_state_confs,
     )
 
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov)
-    old_chlog = spark.conf.get(CHANGELOG_CONF, None)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    ck = tempfile.mkdtemp(prefix="kmrc_ckpt_chlog_")
-    try:
-        use_rocksdb_state(spark, changelog=True)
+    ck = str(tmp_path / "ckpt")
+    confs = {
+        **rocksdb_state_confs(changelog=True),
+        "spark.sql.shuffle.partitions": "2",
+    }
+    with session_confs(spark, confs):
         assert spark.conf.get(CHANGELOG_CONF) == "true"
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
         df = dedup_stream(
             read_events_stream(spark, SF_DIR),
             keys=["user_id", "event_type"],
@@ -775,16 +793,6 @@ def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
         zips = glob.glob(os.path.join(state, "**", "*.zip"), recursive=True)
         assert chlogs, "no .changelog files written"
         assert not zips, f"full snapshot zips present: {zips[:3]}"
-    finally:
-        spark.conf.set(prov, old_prov)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if old_chlog is None:
-            spark.conf.unset(CHANGELOG_CONF)
-        else:
-            spark.conf.set(CHANGELOG_CONF, old_chlog)
-        import shutil
-
-        shutil.rmtree(ck, ignore_errors=True)
 
 
 def test_stream_tokenizer_encode_equals_batch(spark):
